@@ -70,12 +70,13 @@ BENCH_QUERIES = [
 
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
+    from python_mecab_ner_spark.hostconf import driver_memory
     return (SparkSession.builder.master(f"local[{cpus}]")
             .appName("python-mecab-ner-spark-bench")
             .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
             .config("spark.sql.adaptive.enabled", "true")
             .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.driver.memory", "48g")
+            .config("spark.driver.memory", driver_memory())
             .config("spark.ui.enabled", "false")
             .getOrCreate())
 

@@ -13,6 +13,9 @@ Writes partitioned Parquet through sources.catalog (Iceberg-gated).
 
 from __future__ import annotations
 
+from numbers import Integral
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -204,14 +207,10 @@ def ppr_int(edges: DataFrame, seeds: list, iters: int = 3,
     query-sized).  Callers must localCheckpoint deep edge inputs
     first (the kg_entity_rank lesson)."""
     base = (scale * (damping_den - damping_num)) // damping_den
-    # coerce numeric-like seeds (np ints, Rows' values) to plain int;
-    # non-numeric node ids (host strings) pass through unchanged
-    def _as_node(s):
-        try:
-            return int(s)
-        except (TypeError, ValueError):
-            return s
-    seed_ids = [_as_node(s) for s in seeds]
+    # coerce integer seeds (numpy ints from collected Rows) to plain
+    # int; strings pass through unchanged, numeric-looking ones too: a
+    # seed "01" on a string-id graph must match node "01", not 1
+    seed_ids = [int(s) if isinstance(s, Integral) else s for s in seeds]
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select("dst")).distinct())
@@ -242,16 +241,28 @@ def materialize_graph(edges: DataFrame, vertices: DataFrame, out_dir: str,
     Edge layout: partitioned by pmod(src_id, n_buckets) directory key;
     within a partition, data arrives via repartition(src_id, salt) so a
     hot entity's rows spread over n_salt write tasks instead of one.
+
+    The edge table and its head keys are computed once: both are
+    persisted (edges only when the caller has not already cached
+    them), the head-key count fills the caches, the writes read them,
+    and they are released before returning.
     """
-    heads = detect_head_keys(edges)
+    own = edges.storageLevel == StorageLevel.NONE
+    if own:
+        edges = edges.persist()
+    heads = detect_head_keys(edges).persist()
+    n_head_keys = heads.count()
     salted = add_salt(edges, heads, n_salt=n_salt)
     salted = salted.withColumn("bucket", F.pmod("src_id", F.lit(n_buckets)).cast("int"))
     (salted.repartition(F.col("src_id"), F.col("salt"))
      .write.mode("overwrite").partitionBy("bucket")
      .parquet(f"{out_dir}/edges"))
     vertices.repartition(4).write.mode("overwrite").parquet(f"{out_dir}/vertices")
+    heads.unpersist()
+    if own:
+        edges.unpersist()
     return {"edges": f"{out_dir}/edges", "vertices": f"{out_dir}/vertices",
-            "n_head_keys": heads.count()}
+            "n_head_keys": n_head_keys}
 
 
 def khop_neighbors(edges: DataFrame, k: int = 2,

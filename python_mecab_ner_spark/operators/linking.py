@@ -382,7 +382,13 @@ def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
     inter-branch stage overlap; its only benefit — shrinking the
     ~15 MiB per-stage task binaries the monolithic plan serializes —
     buys nothing at scale, since task-binary size is bounded by PLAN
-    size (a constant), not by data."""
+    size (a constant), not by data.
+
+    That rationale covers the ladder's INNER working sets.  Its output
+    is another matter when several actions consume it: each one plans
+    and runs the whole ladder again.  plans.pipeline.run_pipeline
+    therefore cuts the plan at the ladder's output, writing it to
+    parquet and reading it back before building vertices and edges."""
     if disambig not in ("neighbor", "duplicate"):
         raise ValueError(f"unknown disambig policy: {disambig!r}")
     # persist the entity-dim projection: it is referenced by FOUR

@@ -6,6 +6,21 @@ canonicalize alias clusters (LSH + CC) -> materialize salted graph.
 
 extract_graph() wires the DataFrames lazily; run_pipeline() executes
 with per-stage lineage + resume via plans.lineage.
+
+run_pipeline() writes two intermediate stages under its output
+directory: <out>/annotate (the resumable annotate stage) and
+<out>/linked (the linking ladder's output, rewritten every run).
+<out>/linked is there to cut the plan.  link_mentions returns one lazy
+plan, and build_vertices, build_edges and materialize_graph all
+reference it, so without the cut the driver plans the whole ladder
+three times and runs it for the edge write, the vertex write and the
+head-key count.  On a 1,000-page corpus (4 cores) that planning and
+re-running was about half the pipeline's wall.  The cut has to be a
+real plan leaf: persisting `linked` and counting it left the plan
+attached and made the run slower, not faster.
+localCheckpoint(eager=True) was as fast as the parquet write, but its
+blocks die with their executor on a cluster.  extract_graph() stays
+fully lazy; its callers build queries over the plan.
 """
 
 from __future__ import annotations
@@ -142,7 +157,13 @@ def run_pipeline(spark, pages_df, out_dir: str, n_parts: int = 32,
     """Execute with lineage + resume: the annotate stage (the heavy
     scan) is checkpointed per part_key; downstream relational stages
     re-derive from the persisted annotation (cheap relative to the
-    scan) and the graph is written salted."""
+    scan) and the graph is written salted.
+
+    The linking ladder's output is written to <out>/linked and read
+    back, so vertices, edges and the graph write plan over a parquet
+    leaf, not over the ladder (module docstring).  Once it is written
+    the ladder's pinned working sets and the stats aggregate are
+    released; the run leaves nothing in the SQL cache."""
     from .lineage import run_stage
 
     gaz_df = gazetteer_df_from_tsv(spark)
@@ -167,6 +188,12 @@ def run_pipeline(spark, pages_df, out_dir: str, n_parts: int = 32,
                            context_df=context,
                            neighbor_stats_df=nstats,
                            core_stats_df=cstats, disambig=disambig)
+    # cut the plan at the ladder's output (module docstring), then
+    # release the working sets the ladder pinned
+    linked.write.mode("overwrite").parquet(f"{out_dir}/linked")
+    linked.unpersist_working_set()
+    nstats.unpersist_input()
+    linked = spark.read.parquet(f"{out_dir}/linked")
     triples = triples_table(annotated)
     canonical = canonical_map(entities) if canonicalize else None
     # label universe = the DETECTOR-side gazetteer larges (brute

@@ -25,11 +25,12 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 def build_spark(cpus: int):
     from pyspark.sql import SparkSession
+    from python_mecab_ner_spark.hostconf import driver_memory
     return (SparkSession.builder.master(f"local[{cpus}]")
             .appName("bench-hostgraph")
             .config("spark.sql.shuffle.partitions", str(cpus))
             .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.driver.memory", "48g")
+            .config("spark.driver.memory", driver_memory())
             .config("spark.ui.enabled", "false")
             .getOrCreate())
 

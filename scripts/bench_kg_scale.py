@@ -29,12 +29,13 @@ def main() -> int:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+    from python_mecab_ner_spark.hostconf import driver_memory
 
     spark = (SparkSession.builder.master(f"local[{args.cpus}]")
              .appName("kg-scale-bench")
              .config("spark.sql.shuffle.partitions", str(args.cpus))
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", driver_memory())
              .config("spark.ui.enabled", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")

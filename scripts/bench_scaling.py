@@ -42,6 +42,7 @@ sys.path.insert(0, str(REPO))
 
 def _build_spark(cpus: int, set_master: bool = True):
     from pyspark.sql import SparkSession
+    from python_mecab_ner_spark.hostconf import driver_memory
     b = SparkSession.builder
     if set_master:
         # under spark-submit the master comes from --master; setting it
@@ -51,7 +52,7 @@ def _build_spark(cpus: int, set_master: bool = True):
             .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
             .config("spark.sql.adaptive.enabled", "true")
             .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.driver.memory", "48g")
+            .config("spark.driver.memory", driver_memory())
             .config("spark.ui.enabled", "false")
             .getOrCreate())
 
@@ -109,6 +110,8 @@ def measure(cpus: int, corpus_path: str) -> dict:
     --py-files pkg.zip` invocation (the north_rule's run mode) when
     spark-submit is on PATH; plain python subprocess otherwise."""
     import shutil
+
+    from python_mecab_ner_spark.hostconf import driver_memory
     submit = shutil.which("spark-submit")
     if submit:
         zip_path = REPO / "dist" / "python_mecab_ner_spark.zip"
@@ -117,7 +120,7 @@ def measure(cpus: int, corpus_path: str) -> dict:
                             str(REPO / "scripts" / "make_pyfiles_zip.py")],
                            check=True, cwd=str(REPO))
         cmd = [submit, "--master", f"local[{cpus}]",
-               "--driver-memory", "48g",
+               "--driver-memory", driver_memory(),
                "--py-files", str(zip_path),
                __file__, "--child", str(cpus), corpus_path, "--via-submit"]
     else:

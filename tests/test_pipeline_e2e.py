@@ -349,3 +349,54 @@ def test_link_barrier_variant_matches_cache(spark, tmp_path):
     g2["release"]()
     pages.unpersist()
     assert a == b and len(a) > 0
+
+
+# ---- run_pipeline's plan cut at <out>/linked --------------------------------
+
+@pytest.fixture(scope="module")
+def cut_run(spark, tmp_path_factory):
+    """run_pipeline on a small canonicalized corpus, started from an
+    empty SQL cache so the cache state it leaves is its own."""
+    spark.catalog.clearCache()
+    out = str(tmp_path_factory.mktemp("cut") / "kg")
+    pages = pages_dataframe(spark, 60, seed=11, partitions=2)
+    info = run_pipeline(spark, pages, out, n_parts=8, canonicalize=True)
+    cache_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    return pages, out, info, cache_empty
+
+
+def test_run_pipeline_releases_cache(cut_run):
+    """The linking working sets and the stats aggregate are released
+    once <out>/linked is written; the graph write releases its own."""
+    _pages, _out, _info, cache_empty = cut_run
+    assert cache_empty
+
+
+def test_run_pipeline_matches_extract_graph(spark, cut_run):
+    """The graph run_pipeline writes over the <out>/linked leaf equals
+    the one extract_graph plans lazily over the whole ladder."""
+    from pyspark.sql import functions as F
+
+    from python_mecab_ner_spark.operators.graph import detect_head_keys
+    from scripts.check_oracle import value_hash
+
+    pages, out, info, _cache_empty = cut_run
+    g = extract_graph(spark, pages, canonicalize=True)
+
+    def vhash(df, cols):
+        return value_hash(df.select(*cols).collect(), cols)
+
+    def levels(df):
+        return {r.link_level: r.n for r in df.groupBy("link_level")
+                .agg(F.count("*").alias("n")).collect()}
+
+    try:
+        for name in ("edges", "vertices"):
+            cols = g[name].columns
+            written = spark.read.parquet(f"{out}/{name}")
+            assert vhash(written, cols) == vhash(g[name], cols), name
+        assert levels(spark.read.parquet(f"{out}/linked")) == levels(g["linked"])
+        assert info["n_head_keys"] == detect_head_keys(g["edges"]).count()
+        assert g["edges"].count() > 0
+    finally:
+        g["release"]()

@@ -83,3 +83,15 @@ def test_ppr_localizes_vs_global_pagerank(spark):
     assert all(ppr[n] > 0 for n in (1, 2, 3))
     gpr = {r.node: r.pr for r in pagerank_int(e, iters=4).collect()}
     assert gpr[1] == gpr[11] and gpr[2] == gpr[12]
+
+
+def test_ppr_numeric_string_seed_matches_its_node(spark):
+    """On a graph with string node ids, a numeric-looking seed is a
+    node id, not a number: "01" seeds node "01" only, not "1"."""
+    from python_mecab_ner_spark.operators.graph import ppr_int
+    e = spark.createDataFrame([("01", "x"), ("1", "x"), ("x", "01")],
+                              "src string, dst string")
+    got = {r.node: r.pr for r in ppr_int(e, ["01"], iters=1).collect()}
+    # pr0 = {01: 1e6}; one step: 01 keeps its teleport floor 150000
+    # and sends 850000 to x; "1" is not a seed and has no in-edges
+    assert got == {"01": 150000, "1": 0, "x": 850000}
