@@ -4726,7 +4726,7 @@ def _bottomk_oracle_sql(k: int = 128,
             SELECT g, v, key FROM (
               SELECT g, v, key,
                      row_number() OVER (PARTITION BY g
-                                        ORDER BY pri, key) AS rn
+                                        ORDER BY pri, key, v) AS rn
               FROM rows_)
             WHERE rn <= {k}),
         ks AS (SELECT g, count(*) AS ks FROM samp GROUP BY 1),
@@ -5661,7 +5661,10 @@ def q228_fresh_rank(spark, sf_dir):
     (q68 ranks by volume alone; q92 decays but does not propagate).
     Age anchors to the in-query max order date (both engines derive
     it from the same scan), epoch-day integer arithmetic (the ntz
-    discipline)."""
+    discipline).  The age in years is clamped at 30 before the
+    shift: Spark's shiftright takes the count mod 32 and DuckDB's >>
+    does not, and 1024 >> 30 is already 0, so the floor of 1 holds
+    for any older edge in both engines."""
     from python_mecab_ner_spark.operators.graph import \
         pagerank_weighted_int
     o = _load(spark, sf_dir, "orders")
@@ -5672,9 +5675,9 @@ def q228_fresh_rank(spark, sf_dir):
              .crossJoin(F.broadcast(mx))
              .select((F.col("o_custkey") * 2).alias("c"),
                      (F.col("l_suppkey") * 2 + 1).alias("s"),
-                     F.expr("greatest(shiftright(1024,"
-                            " CAST((mx - unix_date(CAST(o_orderdate"
-                            " AS DATE))) div 365 AS INT)), 1)")
+                     F.expr("greatest(shiftright(1024, least("
+                            "CAST((mx - unix_date(CAST(o_orderdate"
+                            " AS DATE))) div 365 AS INT), 30)), 1)")
                      .alias("w"))
              .groupBy("c", "s").agg(F.sum("w").alias("w")))
     edges = (pairs.select(F.col("c").alias("src"),
@@ -5695,10 +5698,10 @@ def _fresh_rank_oracle_sql(iters: int = 3, scale: int = 1_000_000,
                                - DATE '1970-01-01') AS mx
                     FROM orders),
         pairs AS (SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
-                         CAST(sum(greatest(1024 >> CAST(
+                         CAST(sum(greatest(1024 >> least(CAST(
                              (mx.mx - (CAST(o_orderdate AS DATE)
                                        - DATE '1970-01-01')) // 365
-                             AS INT), 1)) AS BIGINT) AS w
+                             AS INT), 30), 1)) AS BIGINT) AS w
                   FROM orders JOIN lineitem
                     ON o_orderkey = l_orderkey
                   CROSS JOIN mx

@@ -248,30 +248,43 @@ def merge_runs(mentions, n_tokens):
 def ner_spans(tokens, mentions):
     """Merged runs + category re-attachment: a run takes the category of
     every mention whose end matches the run end (reference
-    START_IDX=False policy, mecab_ner.py:252-258)."""
-    runs = merge_runs(mentions, len(tokens))
+    START_IDX=False policy, mecab_ner.py:252-258).
+
+    Spans of one run keep the mentions' input order.  Cost is
+    O(tokens + mentions) plus merge_runs' bitmap fill: mentions are
+    indexed by end once, so each run looks its categories up instead
+    of scanning every mention."""
+    by_end: dict[int, list[Mention]] = {}
+    for m in mentions:
+        by_end.setdefault(m.end, []).append(m)
     spans: list[NerSpan] = []
-    for s, e in runs:
-        end_idx = e + 1
-        word = " ".join(restore_tokens(tokens[s:end_idx]))
-        for m in mentions:
-            if m.end == end_idx:
-                spans.append(NerSpan(s, end_idx, word, m.large, m.small))
+    for s, e in merge_runs(mentions, len(tokens)):
+        ending = by_end.get(e + 1)
+        if not ending:
+            continue
+        word = " ".join(restore_tokens(tokens[s:e + 1]))
+        spans.extend(NerSpan(s, e + 1, word, m.large, m.small)
+                     for m in ending)
     return spans
 
 
 def interleave(tokens, spans):
     """First-match-wins token/NER interleave (reference
-    mecab_ner.py:260-291).  Returns [(word, pos, large|None, small|None)]."""
+    mecab_ner.py:260-291).  Returns [(word, pos, large|None, small|None)].
+
+    At each end position the first span in list order wins.  Cost is
+    O(tokens + spans), so O(tokens + mentions), plus the covered-token
+    fill: spans are indexed by end once instead of scanned per token."""
     covered = set()
+    first_by_end: dict[int, NerSpan] = {}
     for sp in spans:
         covered.update(range(sp.start, sp.end))
+        first_by_end.setdefault(sp.end, sp)
     out = []
     for idx, t in enumerate(tokens):
-        for sp in spans:
-            if idx + 1 == sp.end:
-                out.append((sp.word, "ner", sp.large, sp.small))
-                break
+        sp = first_by_end.get(idx + 1)
+        if sp is not None:
+            out.append((sp.word, "ner", sp.large, sp.small))
         if idx in covered:
             continue
         out.append((t["word"], t["pos"], None, None))

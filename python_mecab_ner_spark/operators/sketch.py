@@ -277,7 +277,10 @@ def bottomk_quantiles(df: DataFrame, group_col: str, value_col,
     per stream" when the stream is too big to sort: keep only the k
     rows with the smallest md5 priority per group (a uniform sample
     without replacement, reproducible across engines and runs), read
-    order statistics off the sample.
+    order statistics off the sample.  The sample rank orders by
+    (pri, key, v): pri is a hash of key, so rows sharing a key tie on
+    both and the value decides, and duplicate keys still give the
+    same sample in every engine.
 
     Merge law (proven by test): bottomk(A ∪ B) == bottomk(bottomk(A)
     ∪ bottomk(B)) — priorities are content-derived, so per-partition
@@ -306,7 +309,7 @@ def bottomk_quantiles(df: DataFrame, group_col: str, value_col,
     rows = rows.withColumn("pri", md5_int(F.col("key"), salt=salt))
     samp = (rows.withColumn(
         "rn", F.row_number().over(
-            Window.partitionBy("g").orderBy("pri", "key")))
+            Window.partitionBy("g").orderBy("pri", "key", "v")))
         .where(F.col("rn") <= k).drop("rn").persist())
     ks = samp.groupBy("g").agg(F.count("*").alias("ks"))
     qlit = F.explode(F.array(*[F.lit(q) for q in quantiles]))

@@ -144,7 +144,7 @@ def _py_bottomk_quantiles(rows, k, quantiles):
         grp = [(v, key) for gg, v, key in rows if gg == g]
         n = len(grp)
         samp = sorted(grp, key=lambda t: (md5_int_py(t[1], salt="bkq:"),
-                                          t[1]))[:k]
+                                          t[1], t[0]))[:k]
         sv = sorted(v for v, _ in samp)
         ev = sorted(v for v, _ in grp)
         ks = len(samp)
@@ -174,6 +174,26 @@ def test_bottomk_quantiles_matches_python_twin(spark):
     # sample error should be bounded for a 64-of-1000 uniform sample
     for (g, q), (n, ks, est, exact) in got.items():
         assert abs(est - exact) < 200
+
+
+def test_bottomk_quantiles_duplicate_keys_tie_break_on_value(spark):
+    # every key carries two values, the larger listed first: the rank
+    # ties on (pri, key) and the smaller value must win in every engine
+    from pyspark.sql import functions as F
+
+    from python_mecab_ner_spark.operators.sketch import bottomk_quantiles
+    rng = random.Random(8)
+    rows = []
+    for i in range(400):
+        lo, hi = sorted(rng.sample(range(1000), 2))
+        rows += [(f"g{i % 2}", hi, f"k{i}"), (f"g{i % 2}", lo, f"k{i}")]
+    df = spark.createDataFrame(rows, ["g", "v", "key"])
+    out = bottomk_quantiles(df, "g", F.col("v"), "key", k=33)
+    got = {(r["g"], r["q_pct"]): (r["n"], r["ks"], r["est"], r["exact"])
+           for r in out.collect()}
+    out.unpersist_input()
+    assert got == _py_bottomk_quantiles(rows, k=33,
+                                        quantiles=(10, 25, 50, 75, 90))
 
 
 def test_bottomk_merge_law():
@@ -995,6 +1015,39 @@ def test_fresh_rank_decay_expression(spark):
     # the decay spans three orders of magnitude across TPC-H's
     # seven-year order window
     assert max(got.values()) == 1024 and min(got.values()) == 1
+
+
+def test_fresh_rank_matches_oracle_past_32_years(spark, tmp_path):
+    # order ages of 0-40 years: past 31 Spark's shiftright would take
+    # the count mod 32 and DuckDB's >> would not; both clamp it at 30
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from scripts.check_oracle import value_hash
+    newest = dt.datetime(2000, 1, 1)
+    ages = range(41)
+    pq.write_table(pa.table({
+        "o_orderkey": pa.array(ages, pa.int64()),
+        "o_custkey": pa.array([a % 5 for a in ages], pa.int64()),
+        "o_orderdate": [newest - dt.timedelta(days=365 * a)
+                        for a in ages]}), tmp_path / "orders.parquet")
+    pq.write_table(pa.table({
+        "l_orderkey": pa.array(ages, pa.int64()),
+        "l_suppkey": pa.array([a % 3 for a in ages], pa.int64())}),
+        tmp_path / "lineitem.parquet")
+    sdf = entry.q228_fresh_rank(spark, str(tmp_path))
+    got = value_hash([tuple(r) for r in sdf.collect()], sdf.columns)
+    con = duckdb.connect()
+    for t in ("orders", "lineitem"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{tmp_path / t}.parquet'")
+    cur = con.execute(entry._fresh_rank_oracle_sql())
+    exp = value_hash(cur.fetchall(), [d[0] for d in cur.description])
+    assert got == exp
 
 
 # ------------------------------------------- calibration summary
